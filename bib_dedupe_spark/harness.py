@@ -323,7 +323,7 @@ def q_cc_min_step(spark, sf_dir):
 
 
 def q_cluster_components(spark, sf_dir):
-    """Full iterative connected components (G2) — oracle: recursive CTE."""
+    """Connected components (G2) — oracle: recursive CTE."""
     from bib_dedupe_spark.operators.cluster import connected_components
 
     edges = _zh_edges(spark, sf_dir).select(

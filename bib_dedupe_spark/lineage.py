@@ -10,7 +10,8 @@ Layout under ``checkpoint_dir``:
     manifest.json            — ordered stage completion records
     stages/<stage>/          — stage output parquet
     lineage/<stage>/         — per-partition lineage rows parquet
-    cc_iter_<k>/             — per-iteration CC label frames
+    cc_iter_<k>/             — per-iteration CC edge frames
+    cc_local/                — CC labels from the one-task local finish
 """
 from __future__ import annotations
 

@@ -29,11 +29,14 @@ def _warm_session(spark: SparkSession) -> None:
     reader/writer (footer parsing, codec init). Measured on this engine's
     headline workload: the first real query pays ~3.2 s of this on
     local[32] while an identical second run takes 0.5 s. Running one tiny
-    synthetic job over ``spark.range`` data (plus a 10-row parquet
-    round-trip under a temp dir) at session creation moves that cost out
-    of user queries in ANY deployment — long-lived session services do
-    exactly this. No input data is touched and nothing is cached: every
-    user query still computes from its own sources. Disable with
+    synthetic job over ``spark.range`` data (plus, on ``local`` masters,
+    a 10-row parquet round-trip under a temp dir) at session creation
+    moves that cost out of user queries in ANY deployment — long-lived
+    session services do exactly this. The parquet step is local-only:
+    the temp dir lives on the driver, which executors on a cluster
+    master cannot read or commit to. No input data is touched and
+    nothing is cached: every user query still computes from its own
+    sources. Disable with
     SPARK_GRAFT_WARMUP=0 (the test suite does: it values startup time
     over first-query latency).
     """
@@ -58,6 +61,8 @@ def _warm_session(spark: SparkSession) -> None:
         .mode("overwrite")
         .save()
     )
+    if not spark.sparkContext.master.startswith("local"):
+        return
     tmp = tempfile.mkdtemp(prefix="spark-graft-warmup-")
     try:
         spark.range(0, 10).write.mode("overwrite").parquet(f"{tmp}/w")

@@ -25,10 +25,11 @@ def build(out_path: str) -> str:
         for root, _dirs, files in os.walk(pkg):
             if "__pycache__" in root:
                 continue
+            # package data (everything under data/, which the code reads
+            # at run time) must ship alongside the code
+            in_data = os.path.relpath(root, pkg).split(os.sep)[0] == "data"
             for name in files:
-                # package data (the bundled journal-variants starter
-                # table) must ship alongside the code
-                if not (name.endswith(".py") or name.endswith(".csv")):
+                if not (in_data or name.endswith(".py")):
                     continue
                 full = os.path.join(root, name)
                 zf.write(full, os.path.relpath(full, REPO))
