@@ -19,22 +19,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 PLAN_DIR = os.environ.get("BENCH_EXTRA_PLAN_DIR", "plans/r06")
-
-HEADLINE = [
-    "block_pairs",
-    "block_rule_attrib",
-    "token_overlap_prune",
-    "minhash_lsh_pairs",
-    "exact_dedup",
-    "simhash",
-    "cluster_components",
-    "survivor_origin",
-    "embedding_topk",
-    "events_agg",
-]
 
 
 def _spark():

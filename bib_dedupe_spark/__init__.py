@@ -10,10 +10,10 @@ survivorship — designed for multi-executor clusters at web scale.
 Pipeline:  prep → block → match (sim + rules) → cluster → merge
 
 Companion surfaces: textops (minhash/simhash/jaccard dedup, cosine /
-LSH / IVF similarity search, quality + language + fingerprint analysis,
-multimodal column plumbing), streaming (watermarked + stateful dedup,
-incremental delta-blocking linkage), lineage (resumable checkpoints +
-per-partition metrics).
+LSH / IVF similarity search, quality + language + fingerprint
+analysis), streaming (watermarked + stateful dedup, incremental
+delta-blocking linkage), lineage (resumable checkpoints + per-partition
+metrics).
 """
 from __future__ import annotations
 

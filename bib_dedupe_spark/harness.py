@@ -11,7 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from bib_dedupe_spark.textops import dedup, similarity_search
 
 STOPWORDS = ("the", "a", "of", "and", "in")
 
@@ -362,114 +363,21 @@ def q_exact_dedup(spark, sf_dir):
     )
 
 
-def _shingles(spark, sf_dir, lang):
-    docs = (
-        _docs(spark, sf_dir)
-        .filter(F.col("lang") == lang)
-        .select("doc_id", F.split("text", " ").alias("w"))
-        .filter(F.size("w") >= 3)
-    )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("w") - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(F.col("w"), i),
-            F.element_at(F.col("w"), i + 1),
-            F.element_at(F.col("w"), i + 2),
-        ),
-    )
-    return docs.select(
-        "doc_id", F.explode(F.array_distinct(grams)).alias("shingle")
-    )
-
-
 def q_minhash_lsh_pairs(spark, sf_dir):
-    """MinHash + banded LSH near-dup candidates (md5 minwise hashing).
-
-    One pass per doc: the 8 per-seed minhashes are 8 min-aggregates of a
-    single groupBy(doc_id) (no 8× seed explode, no (doc_id, seed) + (doc_id,
-    band) shuffle chain), band signatures are column concats in seed order
-    (identical to the sorted-collect_list join of the per-seed rows), and
-    pair generation groups by (band, sig) once instead of self-joining the
-    whole bands subtree against itself — the old plan computed the full
-    scan→shingle→minhash→bands chain TWICE (once per join side) with 5
-    exchanges; this one computes it once with 3. Per-bucket pair expansion
-    is bounded by LSH bucket size (near-dup group), exactly like the join's
-    per-key output. Row set is unchanged (equivalence-checked + oracle)."""
-    shingled = _shingles(spark, sf_dir, "en")
-    mh = [
-        F.min(F.md5(F.concat_ws("|", F.lit(str(s)), "shingle"))).alias(
-            f"mh{s}"
-        )
-        for s in range(8)
-    ]
-    sigs = shingled.groupBy("doc_id").agg(*mh)
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("band"),
-                    F.concat("mh0", "mh1", "mh2", "mh3").alias("sig"),
-                ),
-                F.struct(
-                    F.lit(1).alias("band"),
-                    F.concat("mh4", "mh5", "mh6", "mh7").alias("sig"),
-                ),
-            )
-        ).alias("bs"),
-    ).select(
-        "doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-    groups = (
-        bands.groupBy("band", "sig")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    return (
-        groups.select(F.posexplode("ids").alias("_i", "id1"), "ids")
-        .select(
-            "id1",
-            F.explode(
-                F.slice("ids", F.col("_i") + 2, F.size("ids"))
-            ).alias("id2"),
-        )
-        .distinct()
-    )
+    """MinHash (8 hashes) + banded LSH (2 bands) near-dup candidates."""
+    docs = _docs(spark, sf_dir).filter(F.col("lang") == "en")
+    return dedup.minhash_near_duplicates(docs, n_hashes=8, bands=2)
 
 
 def q_ngram_jaccard(spark, sf_dir, lang="fr"):
     """3-gram Jaccard near-dup scoring over blocked pairs (integer form)."""
-    sh = _shingles(spark, sf_dir, lang)
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     pairs = (
         _block_pairs(spark, sf_dir)
         .filter(F.col("lang") == lang)
         .select("id1", "id2")
     )
-    shared = (
-        pairs.join(sh.select(F.col("doc_id").alias("id1"), "shingle"), "id1")
-        .join(
-            sh.select(F.col("doc_id").alias("id2"), "shingle"),
-            ["id2", "shingle"],
-        )
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("shared"))
-    )
-    c1 = counts.select(F.col("doc_id").alias("id1"), F.col("n_sh").alias("n1"))
-    c2 = counts.select(F.col("doc_id").alias("id2"), F.col("n_sh").alias("n2"))
-    return (
-        pairs.join(shared, ["id1", "id2"], "left")
-        .fillna({"shared": 0})
-        .join(c1, "id1")
-        .join(c2, "id2")
-        .select(
-            "id1",
-            "id2",
-            "shared",
-            (F.col("n1") + F.col("n2") - F.col("shared")).alias("union_size"),
-        )
-    )
+    docs = _docs(spark, sf_dir).filter(F.col("lang") == lang)
+    return dedup.ngram_jaccard(pairs, dedup.shingles(docs))
 
 
 def q_near_dup_clusters(spark, sf_dir):
@@ -661,69 +569,20 @@ def q_quality_flags(spark, sf_dir):
 
 
 def q_simhash(spark, sf_dir):
-    """16-bit SimHash over distinct tokens (md5-derived bit planes).
-
-    hv = value of the first 4 md5 hex nibbles, computed with ONE md5 +
-    conv per token (the instr-ladder form evaluated md5 four times per
-    token); the 16 per-bit contribution sums are 16 integer aggregates of
-    a single groupBy(doc_id) — no 16× bit-row explode and one exchange
-    instead of the (doc_id, j) + (doc_id) two-shuffle chain. The bit
-    string concatenates in j order, identical to the sorted-collect_list
-    form. Row set is unchanged (equivalence-checked + oracle)."""
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("t")
+    """16-bit SimHash over distinct tokens (md5-derived bit planes)."""
+    return dedup.simhash(_docs(spark, sf_dir)).select(
+        F.col("doc").alias("doc_id"), "simhash"
     )
-    hv = F.conv(F.substring(F.md5("t"), 1, 4), 16, 10).cast("int")
-    toks = docs.select("doc_id", hv.alias("hv"))
-    sums = [
-        F.sum(
-            2 * F.shiftright(F.col("hv"), j).bitwiseAND(F.lit(1)) - 1
-        ).alias(f"s{j}")
-        for j in range(16)
-    ]
-    agg = toks.groupBy("doc_id").agg(*sums)
-    bits = [
-        F.when(F.col(f"s{j}") > 0, "1").otherwise("0") for j in range(16)
-    ]
-    return agg.select("doc_id", F.concat(*bits).alias("simhash"))
 
 
 # ----------------------------------------------------------- embeddings
 
-def _unit_dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def q_embedding_topk(spark, sf_dir):
     """Brute-force cosine top-k neighbors for a query subset (ANN baseline)."""
     emb = _embeddings(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-    )
-    dot = _unit_dot(F.col("qv"), F.col("cv"))
-    n1 = _unit_dot(F.col("qv"), F.col("qv"))
-    n2 = _unit_dot(F.col("cv"), F.col("cv"))
-    cosine = dot / F.sqrt(n1 * n2)
-    scored = (
-        queries.crossJoin(corpus)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine.alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return similarity_search.brute_force_topk(
+        emb.filter(F.col("vec_id") < 5), emb, k=3
+    ).select("query_id", "neighbor_id", "rank")
 
 
 def q_ivf_topk(spark, sf_dir):
@@ -732,8 +591,6 @@ def q_ivf_topk(spark, sf_dir):
     argmax dot → list equi-join → per-query rank. Ranks only (ints) for
     exact cross-engine comparison, mirroring embedding_topk."""
     import numpy as np
-
-    from bib_dedupe_spark.textops.similarity_search import ivf_topk
 
     emb = _embeddings(spark, sf_dir)
     cents = np.array(
@@ -744,7 +601,7 @@ def q_ivf_topk(spark, sf_dir):
         dtype=np.float64,
     )
     queries = emb.filter(F.col("vec_id") < 5).select("vec_id", "embedding")
-    return ivf_topk(
+    return similarity_search.ivf_topk(
         queries, emb, k=3, n_probe=2, centroids=cents
     ).select("query_id", "neighbor_id", "rank")
 
@@ -755,10 +612,7 @@ def q_embedding_near_dup(spark, sf_dir):
     emb = _embeddings(spark, sf_dir)
     a = emb.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("v1"))
     b = emb.select(F.col("vec_id").alias("id2"), F.col("embedding").alias("v2"))
-    cos = _unit_dot(F.col("v1"), F.col("v2")) / F.sqrt(
-        _unit_dot(F.col("v1"), F.col("v1"))
-        * _unit_dot(F.col("v2"), F.col("v2"))
-    )
+    cos = similarity_search.cosine(F.col("v1"), F.col("v2"))
     return (
         a.crossJoin(b)
         .filter(F.col("id1") < F.col("id2"))
@@ -777,10 +631,6 @@ def q_lsh_multi_table_pairs(spark, sf_dir):
     recomputes symbolically: plane[t][d][p] = ((t*10007 + d*97 + p*31)
     mod 7) - 3, two tables of four planes over the 64-dim embeddings.
     """
-    from bib_dedupe_spark.textops.similarity_search import (
-        lsh_candidate_pairs,
-    )
-
     n_tables, n_planes, dim = 2, 4, 64
     planes = [
         [
@@ -799,7 +649,7 @@ def q_lsh_multi_table_pairs(spark, sf_dir):
         "embedding",
         F.transform("embedding", lambda x: F.floor(x * 1024) / 1024),
     )
-    pairs = lsh_candidate_pairs(
+    pairs = similarity_search.lsh_candidate_pairs(
         emb,
         emb,
         n_planes=n_planes,
@@ -819,13 +669,7 @@ def q_lsh_multi_table_pairs(spark, sf_dir):
 def q_embedding_sign_lsh(spark, sf_dir):
     """Sign-based LSH bucketing of embeddings (scale path for ANN)."""
     emb = _embeddings(spark, sf_dir)
-    bucket = F.array_join(
-        F.transform(
-            F.slice("embedding", 1, 8),
-            lambda x: F.when(x >= 0, "1").otherwise("0"),
-        ),
-        "",
-    )
+    bucket = similarity_search.sign_lsh_bucket(F.col("embedding"), 8)
     return emb.select("vec_id", "label", bucket.alias("bucket"))
 
 

@@ -3,15 +3,24 @@
 All-native Spark plans (no Python UDFs): hashing is md5-based so results
 are engine-portable and deterministic; every operator returns a DataFrame
 and composes with the record-linkage pipeline. Designed for the 100 TB
-path: shingling is an explode (map-side), minhash is a partial-aggregable
-groupBy, LSH candidates come from an equi-join on band signatures —
-shuffle keys are (band, signature), which salts naturally because the
-signature space is wide.
+path: shingling is an explode (map-side), minhash and simhash are one
+partial-aggregable ``groupBy(doc)`` each, and LSH candidates come from a
+``groupBy(band, sig)`` — shuffle keys are (band, signature), which salts
+naturally because the signature space is wide.
+
+Tokens are the pieces of ``split(text, ' ')``: one space separates two
+tokens, and text is taken as is (no case folding, no whitespace
+collapsing), the same tokenization as ``string_split(text, ' ')`` in SQL.
+The ``harness`` queries call these functions, so their DuckDB oracles pin
+the row sets.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# a token hash is its first 4 md5 hex nibbles
+SIMHASH_BITS = 16
 
 
 def exact_duplicates(
@@ -31,70 +40,88 @@ def exact_duplicates(
 
 
 def shingles(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    size: int = 3,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Distinct word n-gram shingles per document (explode, no shuffle)."""
-    words = F.split(F.col(text_col), r"\s+")
+    """Distinct word 3-gram shingles per document (explode, no shuffle).
+
+    Documents with fewer than 3 words have no shingle.
+    """
+    words = df.select(
+        F.col(id_col).alias("doc"), F.split(F.col(text_col), " ").alias("w")
+    ).filter(F.size("w") >= 3)
     grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(words) - (size - 1), F.lit(0))),
+        F.sequence(F.lit(1), F.size("w") - 2),
         lambda i: F.concat_ws(
-            " ", *[F.element_at(words, i + off) for off in range(size)]
+            " ", *[F.element_at(F.col("w"), i + off) for off in range(3)]
         ),
     )
-    return df.filter(F.size(words) >= size).select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(grams)).alias("shingle"),
+    return words.select(
+        "doc", F.explode(F.array_distinct(grams)).alias("shingle")
     )
 
 
 def minhash_signatures(
     shingled: DataFrame, n_hashes: int = 32
 ) -> DataFrame:
-    """Per-(doc, seed) minwise md5 hash — one partial-aggregable groupBy."""
-    seeded = shingled.select(
-        "doc",
-        F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("seed"),
-        "shingle",
+    """Per-doc minwise md5 hashes ``mh0..mh{n_hashes-1}``.
+
+    One partial-aggregable ``groupBy(doc)`` with one min-aggregate per
+    seed: no seed explode, no (doc, seed) shuffle.
+    """
+    return shingled.groupBy("doc").agg(
+        *[
+            F.min(F.md5(F.concat_ws("|", F.lit(str(s)), "shingle"))).alias(
+                f"mh{s}"
+            )
+            for s in range(n_hashes)
+        ]
     )
-    hashed = seeded.select(
-        "doc",
-        "seed",
-        F.md5(F.concat_ws("|", F.col("seed").cast("string"), "shingle")).alias(
-            "h"
-        ),
-    )
-    return hashed.groupBy("doc", "seed").agg(F.min("h").alias("minhash"))
 
 
 def lsh_candidates(
     signatures: DataFrame, n_hashes: int = 32, bands: int = 8
 ) -> DataFrame:
-    """Banded LSH: docs sharing any band signature become candidates."""
-    rows_per_band = n_hashes // bands
-    banded = (
-        signatures.withColumn(
-            "band", F.floor(F.col("seed") / rows_per_band).cast("int")
+    """Banded LSH: docs sharing any band signature become candidates.
+
+    A band signature concatenates its rows' minhashes in seed order.
+    Pairs come from one ``groupBy(band, sig)``, expanded per bucket
+    (bounded by the near-dup group size), instead of a self-join that
+    would plan the signature subtree once per side.
+    """
+    if n_hashes % bands:
+        raise ValueError(
+            f"n_hashes={n_hashes} does not split into {bands} equal bands"
         )
-        .groupBy("doc", "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seed", "minhash"))),
-                    lambda s: s["minhash"],
-                ),
-                "",
-            ).alias("sig")
-        )
+    rows = n_hashes // bands
+    banded = signatures.select(
+        "doc",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.concat(
+                            *[f"mh{b * rows + r}" for r in range(rows)]
+                        ).alias("sig"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bs"),
+    ).select("doc", "bs.band", "bs.sig")
+    groups = (
+        banded.groupBy("band", "sig")
+        .agg(F.array_sort(F.collect_list("doc")).alias("ids"))
+        .filter(F.size("ids") >= 2)
     )
-    left = banded.select(F.col("doc").alias("id1"), "band", "sig")
-    right = banded.select(F.col("doc").alias("id2"), "band", "sig")
     return (
-        left.join(right, ["band", "sig"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
+        groups.select(F.posexplode("ids").alias("_i", "id1"), "ids")
+        .select(
+            "id1",
+            F.explode(
+                F.slice("ids", F.col("_i") + 2, F.size("ids"))
+            ).alias("id2"),
+        )
         .distinct()
     )
 
@@ -105,20 +132,13 @@ def minhash_near_duplicates(
     id_col: str = "doc_id",
     n_hashes: int = 32,
     bands: int = 8,
-    shingle_size: int = 3,
-    min_jaccard: float | None = None,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs, optionally verified by exact Jaccard."""
-    sh = shingles(df, text_col, id_col, shingle_size)
-    candidates = lsh_candidates(
-        minhash_signatures(sh, n_hashes), n_hashes, bands
+    """MinHash+LSH near-dup candidate pairs ``(id1 < id2)``."""
+    return lsh_candidates(
+        minhash_signatures(shingles(df, text_col, id_col), n_hashes),
+        n_hashes,
+        bands,
     )
-    if min_jaccard is None:
-        return candidates
-    scored = ngram_jaccard(candidates, sh)
-    return scored.filter(
-        F.col("shared") / F.col("union_size") >= min_jaccard
-    ).select("id1", "id2")
 
 
 def ngram_jaccard(pairs: DataFrame, shingled: DataFrame) -> DataFrame:
@@ -149,60 +169,39 @@ def ngram_jaccard(pairs: DataFrame, shingled: DataFrame) -> DataFrame:
 
 
 def simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 16,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Per-document SimHash bit-string over distinct tokens (md5 planes)."""
+    """Per-document 16-bit SimHash bit-string over distinct tokens.
+
+    A token's hash value is its first 4 md5 hex nibbles (one md5 + conv
+    per token); the 16 per-bit contribution sums are 16 integer
+    aggregates of a single ``groupBy(doc)``, and bit ``j`` is character
+    ``j + 1`` of the string.
+    """
     toks = df.select(
         F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(F.split(F.col(text_col), r"\s+"))).alias(
-            "t"
-        ),
+        F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("t"),
     )
-    hexv = F.expr(
-        "(instr('0123456789abcdef', substring(md5(t),1,1)) - 1) * 4096"
-        " + (instr('0123456789abcdef', substring(md5(t),2,1)) - 1) * 256"
-        " + (instr('0123456789abcdef', substring(md5(t),3,1)) - 1) * 16"
-        " + (instr('0123456789abcdef', substring(md5(t),4,1)) - 1)"
-    )
-    contribs = toks.select("doc", hexv.alias("hv")).select(
+    hv = toks.select(
         "doc",
-        F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("j"),
-        "hv",
-    ).select(
-        "doc",
-        "j",
-        (
-            2
-            * (
-                F.floor(F.col("hv") / F.pow(F.lit(2), F.col("j"))).cast(
-                    "long"
-                )
-                % 2
-            )
-            - 1
-        ).alias("contrib"),
+        F.conv(F.substring(F.md5("t"), 1, 4), 16, 10).cast("int").alias("hv"),
     )
-    sums = contribs.groupBy("doc", "j").agg(F.sum("contrib").alias("s"))
-    return sums.groupBy("doc").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            "j",
-                            F.when(F.col("s") > 0, "1")
-                            .otherwise("0")
-                            .alias("b"),
-                        )
-                    )
-                ),
-                lambda s: s["b"],
-            ),
-            "",
-        ).alias("simhash")
+    sums = hv.groupBy("doc").agg(
+        *[
+            F.sum(
+                2 * F.shiftright(F.col("hv"), j).bitwiseAND(F.lit(1)) - 1
+            ).alias(f"s{j}")
+            for j in range(SIMHASH_BITS)
+        ]
+    )
+    return sums.select(
+        "doc",
+        F.concat(
+            *[
+                F.when(F.col(f"s{j}") > 0, "1").otherwise("0")
+                for j in range(SIMHASH_BITS)
+            ]
+        ).alias("simhash"),
     )
 
 
@@ -210,7 +209,6 @@ def simhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bits: int = 16,
     max_hamming: int = 2,
     n_blocks: int = 4,
 ) -> DataFrame:
@@ -221,8 +219,8 @@ def simhash_near_duplicates(
     ``max_hamming < n_blocks`` (pigeonhole) — the candidate join is an
     equi-join per block, then Hamming distance is verified natively.
     """
-    sigs = simhash(df, text_col, id_col, bits)
-    block_len = bits // n_blocks
+    sigs = simhash(df, text_col, id_col)
+    block_len = SIMHASH_BITS // n_blocks
     blocked = sigs.select(
         "doc",
         "simhash",

@@ -1,8 +1,11 @@
 """Tests for the training-data text/embedding operators."""
+import hashlib
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from bib_dedupe_spark.textops import dedup, multimodal, quality, similarity_search
+from bib_dedupe_spark.textops import dedup, quality, similarity_search
 
 
 @pytest.fixture(scope="module")
@@ -35,6 +38,67 @@ def test_minhash_near_duplicates(docs):
     assert (1, 2) in pairs  # exact dup always survives
     assert (1, 3) in pairs or (2, 3) in pairs  # near dup shares bands
     assert (1, 4) not in pairs
+
+
+def _minhash_lsh_reference(rows, n_hashes, bands):
+    """Pure-Python minhash + banding: md5 of ``"<seed>|<shingle>"``."""
+    per_band = n_hashes // bands
+    buckets = {}
+    for doc, text in rows:
+        words = text.split(" ")
+        grams = {" ".join(words[i:i + 3]) for i in range(len(words) - 2)}
+        if not grams:
+            continue
+        mins = [
+            min(hashlib.md5(f"{s}|{g}".encode()).hexdigest() for g in grams)
+            for s in range(n_hashes)
+        ]
+        for b in range(bands):
+            sig = "".join(mins[b * per_band:(b + 1) * per_band])
+            buckets.setdefault((b, sig), set()).add(doc)
+    return {
+        (a, b) for ids in buckets.values() for a in ids for b in ids if a < b
+    }
+
+
+@pytest.mark.parametrize("n_hashes,bands", [(16, 8), (8, 2)])
+def test_minhash_near_duplicates_row_set(docs, n_hashes, bands):
+    # one space separates tokens: a doubled space is an empty token
+    corpus = docs.union(
+        docs.sparkSession.createDataFrame(
+            [(7, "the quick  brown fox jumps over the lazy dog", "src6")],
+            docs.columns,
+        )
+    )
+    want = _minhash_lsh_reference(
+        [(r["doc_id"], r["text"]) for r in corpus.collect()], n_hashes, bands
+    )
+    got = dedup.minhash_near_duplicates(corpus, n_hashes=n_hashes, bands=bands)
+    rows = [(r["id1"], r["id2"]) for r in got.collect()]
+    assert len(rows) == len(set(rows))
+    assert set(rows) == want
+    assert (1, 2) in want
+
+
+def test_minhash_rejects_uneven_bands(docs):
+    with pytest.raises(ValueError, match="equal bands"):
+        dedup.minhash_near_duplicates(docs, n_hashes=10, bands=3)
+
+
+def _exchanges(df):
+    """Exchange operators in the executed (final adaptive) plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    return len(re.findall(r"^[\s:+\-|]*(?:Broadcast)?Exchange ", final, re.M))
+
+
+def test_library_plan_shapes(docs):
+    """MinHash/LSH plans 3 exchanges (signature groupBy, bucket groupBy,
+    distinct) and SimHash 1 (the per-doc groupBy)."""
+    mh = dedup.minhash_near_duplicates(docs, n_hashes=8, bands=2)
+    assert _exchanges(mh) == 3
+    assert _exchanges(dedup.simhash(docs)) == 1
 
 
 def test_ngram_jaccard_scores(docs):
@@ -113,68 +177,12 @@ def test_quality_and_language(docs):
 
 
 def test_fingerprints(docs):
-    fps = dedup.exact_duplicates  # noqa: F841 (imported op sanity)
     rows = quality.fingerprints(docs).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc"], set()).add(r["fingerprint"])
     assert by_doc[1] == by_doc[2]  # identical docs → identical fingerprints
     assert by_doc[1] != by_doc[4]
-
-
-def test_multimodal_stub(spark):
-    media = spark.createDataFrame(
-        [
-            ("m1", "image", bytearray(b"\x89PNGfakepayload"), "image/png", "u1"),
-            ("m2", "video", bytearray(b"\x00" * 4096), "video/mp4", "u2"),
-            ("m3", "audio", bytearray(b"RIFF"), "audio/wav", "u3"),
-        ],
-        schema=multimodal.MEDIA_SCHEMA,
-    )
-    has_pil = multimodal._try_real_decoder() is not None
-
-    if has_pil:
-        # garbage payload on the real decoder: null features, tagged error
-        feats = multimodal.decode_images(media).collect()
-        assert len(feats) == 1
-        assert feats[0]["decoder"] == "error"
-        assert feats[0]["width"] is None
-    else:
-        # strict (the default) must fail fast — never silent fakes
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_images(media)
-        feats = multimodal.decode_images(media, strict=False).collect()
-        assert len(feats) == 1
-        assert feats[0]["media_id"] == "m1"
-        assert feats[0]["n_bytes"] == 15
-        assert feats[0]["width"] >= 64 and feats[0]["height"] >= 64
-        assert feats[0]["decoder"] == "synthetic"  # fakes always tagged
-
-    frames = multimodal.sample_frames(media, every_n_bytes=1024).collect()
-    assert {f["media_id"] for f in frames} == {"m2"}
-    assert len(frames) == 4
-
-
-def test_multimodal_real_decoder_contract(spark):
-    """Contract for the real-PIL branch: a valid image decodes to its true
-    dimensions, decoder='pil', and a 16-hex-digit average-hash."""
-    Image = multimodal._try_real_decoder()
-    if Image is None:
-        pytest.skip("PIL not installed in this environment")
-    import io
-
-    buf = io.BytesIO()
-    Image.new("RGB", (12, 7), (200, 10, 10)).save(buf, format="PNG")
-    media = spark.createDataFrame(
-        [("img1", "image", bytearray(buf.getvalue()), "image/png", "u1")],
-        schema=multimodal.MEDIA_SCHEMA,
-    )
-    feats = multimodal.decode_images(media).collect()
-    assert len(feats) == 1
-    row = feats[0]
-    assert (row["width"], row["height"]) == (12, 7)
-    assert row["decoder"] == "pil"
-    assert len(row["phash"]) == 16 and int(row["phash"], 16) >= 0
 
 
 def test_ivf_topk_recall(spark):
